@@ -336,16 +336,14 @@ def injective_hash_seed(
 
 
 def _pin_and_hash_inv(
-    inv: DataFrame,
     sh: DataFrame,
     hash_fn,
-    pin_lineage: bool,
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
     """Shared hashed-key entry for the n-gram pair pipelines: prove an
-    injective seed, then re-key ``inv`` (id, __s), the verification
-    arrays in ``sh`` (id, __sh), and the document-frequency table on
-    ``xxhash64(shingle, seed)`` — 8-byte longs instead of ~30-byte
-    strings through every downstream exchange and sort.
+    injective seed, then re-key the inverted list (id, __s), the
+    verification arrays in ``sh`` (id, __sh), and the document-frequency
+    table on ``xxhash64(shingle, seed)`` — 8-byte longs instead of
+    ~30-byte strings through every downstream exchange and sort.
 
     The proof and the frequency aggregate are FUSED (r18 optimization,
     guide §1.2/§2.3): document frequency ``freq`` = groupBy(shingle)
@@ -358,9 +356,9 @@ def _pin_and_hash_inv(
     ``freq_h`` is (hashed __s, __df) — df values byte-identical to the
     string pipeline's by the injectivity proof.
 
-    ``pin_lineage=True`` persists the per-doc shingle-ARRAY frame
-    ``sh`` (MEMORY_AND_DISK) BEFORE the proof aggregate runs, and
-    re-derives ``inv`` from the pinned frame, so the proof, the
+    The per-doc shingle-ARRAY frame ``sh`` is persisted
+    (MEMORY_AND_DISK) BEFORE the proof aggregate runs, and the
+    inverted list is derived from the pinned frame, so the proof, the
     inverted-list passes AND the verification arrays all read the
     SAME rows even when the input lineage is nondeterministic
     (re-read of changing storage, nondeterministic upstream) — the
@@ -375,25 +373,23 @@ def _pin_and_hash_inv(
     memory eviction recomputes from lineage, which re-opens the
     determinism assumption — truly nondeterministic inputs need a
     checkpoint upstream. At 100 TB the pinned frame is large
-    (disk-backed spill, same bytes as the old exploded-list pin);
-    ``pin_lineage=False`` skips it under the immutable-input
-    assumption (the normal Spark contract) and recomputes the passes
-    from the scan."""
-    if pin_lineage:
-        sh = sh.persist(StorageLevel.MEMORY_AND_DISK)
-        # identical construction to the callers' (explode_outer + null
-        # guard — see ngram_jaccard_pairs on why outer), re-rooted on
-        # the pinned arrays
-        inv = (
-            sh.select("__id", F.explode_outer("__sh").alias("__s"))
-            .where(F.col("__s").isNotNull())
-        )
-    freq = inv.groupBy("__s").agg(F.count(F.lit(1)).alias("__df"))
-    if pin_lineage:
-        # small (one row per distinct shingle); pinning it means the
-        # proof aggregate primes the exact rows the prefix-ordering
-        # pass then reads
-        freq = freq.persist(StorageLevel.MEMORY_AND_DISK)
+    (disk-backed spill, same bytes as the old exploded-list pin)."""
+    sh = sh.persist(StorageLevel.MEMORY_AND_DISK)
+    # same construction as the unhashed path (explode_outer + null
+    # guard — see ngram_jaccard_pairs on why outer), rooted on the
+    # pinned arrays
+    inv = (
+        sh.select("__id", F.explode_outer("__sh").alias("__s"))
+        .where(F.col("__s").isNotNull())
+    )
+    # small (one row per distinct shingle); pinning it means the proof
+    # aggregate primes the exact rows the prefix-ordering pass then
+    # reads
+    freq = (
+        inv.groupBy("__s")
+        .agg(F.count(F.lit(1)).alias("__df"))
+        .persist(StorageLevel.MEMORY_AND_DISK)
+    )
     seed = injective_hash_seed(freq, "__s", hash_fn=hash_fn)
     hf = hash_fn or (lambda c, s: F.xxhash64(c, s))
     seed_lit = F.lit(seed)
@@ -418,7 +414,6 @@ def ngram_jaccard_pairs(
     prefix_filter: bool = True,
     hashed: bool = True,
     hash_fn=None,
-    pin_lineage: bool = True,
 ) -> DataFrame:
     """Exact near-duplicate pairs by word-n-gram Jaccard similarity.
 
@@ -459,9 +454,8 @@ def ngram_jaccard_pairs(
     ``hashed=False`` (the permanent A/B pin in
     tests/test_dedup_hashed.py). The proof costs one extra corpus
     aggregate and makes the call EAGER (a job runs at plan-build
-    time); ``pin_lineage`` persists the inverted list so the proof
-    covers the exact rows the pipeline hashes (see
-    ``_pin_and_hash_inv``).
+    time); the shingle arrays are persisted first so the proof covers
+    the exact rows the pipeline hashes (see ``_pin_and_hash_inv``).
 
     Output: (doc_a, doc_b, common_shingles, jaccard_bp) with doc_a <
     doc_b; jaccard_bp = floor(jaccard * 10000) computed with exact
@@ -470,23 +464,25 @@ def ngram_jaccard_pairs(
     """
     tau_bp = int(round(threshold * 10000))
     sh = _shingle_df(df, text_col, id_col, n)
-    # explode_OUTER on purpose: inner explode makes the optimizer infer
-    # a `size(__sh) > 0 AND isnotnull(__sh)` filter and push it to the
-    # scan, substituting the whole norm→toks→shingle chain into an
-    # interpreted, pre-repartition (single-task) Filter — measured +6 s
-    # at sf0.1. _shingle_df already guarantees non-empty arrays (token
-    # filter), so outer + a post-Generate null guard is row-identical,
-    # and a guard on the generator OUTPUT cannot be pushed below it.
-    inv = (
-        sh.select("__id", F.explode_outer("__sh").alias("__s"))
-        .where(F.col("__s").isNotNull())
-    )
     freq = None
     if hashed:
         # from here on, shingle identity IS the proven-injective hash
         # — strings never cross another exchange. freq rides along
         # from the fused proof pass (see _pin_and_hash_inv).
-        inv, sh, freq = _pin_and_hash_inv(inv, sh, hash_fn, pin_lineage)
+        inv, sh, freq = _pin_and_hash_inv(sh, hash_fn)
+    else:
+        # explode_OUTER on purpose: inner explode makes the optimizer
+        # infer a `size(__sh) > 0 AND isnotnull(__sh)` filter and push
+        # it to the scan, substituting the whole norm→toks→shingle
+        # chain into an interpreted, pre-repartition (single-task)
+        # Filter — measured +6 s at sf0.1. _shingle_df already
+        # guarantees non-empty arrays (token filter), so outer + a
+        # post-Generate null guard is row-identical, and a guard on
+        # the generator OUTPUT cannot be pushed below it.
+        inv = (
+            sh.select("__id", F.explode_outer("__sh").alias("__s"))
+            .where(F.col("__s").isNotNull())
+        )
     if max_df is not None or (prefix_filter and tau_bp > 0):
         # document frequency is computed ONCE and reused for both the
         # max_df cutoff and the prefix ordering. Filtering freq itself
@@ -581,7 +577,6 @@ def containment_pairs(
     max_df: int | None = None,
     hashed: bool = True,
     hash_fn=None,
-    pin_lineage: bool = True,
 ) -> DataFrame:
     """DIRECTIONAL near-dup pairs by n-gram set containment
     C(A -> B) = |A ∩ B| / |A| — the asymmetric signal Jaccard misses: a
@@ -610,7 +605,7 @@ def containment_pairs(
     Both directions can appear for mutually-similar docs — the signal
     is directional by design.
 
-    ``hashed``/``hash_fn``/``pin_lineage``: same hash-keyed pipeline
+    ``hashed``/``hash_fn``: same pinned, hash-keyed pipeline
     as ``ngram_jaccard_pairs`` (proven-injective xxhash64 longs
     through every exchange; the asymmetric prefix argument is
     order-agnostic — the pigeonhole holds for ANY fixed total order of
@@ -622,13 +617,13 @@ def containment_pairs(
     round-18)."""
     tau_bp = int(round(threshold * 10000))
     sh = _shingle_df(df, text_col, id_col, n)
-    inv = (
-        sh.select("__id", F.explode_outer("__sh").alias("__s"))
-        .where(F.col("__s").isNotNull())
-    )
     if hashed:
-        inv, sh, freq = _pin_and_hash_inv(inv, sh, hash_fn, pin_lineage)
+        inv, sh, freq = _pin_and_hash_inv(sh, hash_fn)
     else:
+        inv = (
+            sh.select("__id", F.explode_outer("__sh").alias("__s"))
+            .where(F.col("__s").isNotNull())
+        )
         freq = inv.groupBy("__s").agg(F.count(F.lit(1)).alias("__df"))
     if max_df is not None:
         freq = freq.where(F.col("__df") <= max_df)
@@ -1263,8 +1258,7 @@ def simhash_dedup_against(
 # that always parents the larger root under the smaller computes
 # exactly the min-of-component labels the remaining rounds would
 # (pinned by test_neardup_components_local_vs_distributed).
-# Set to 0 (param or UBA_CC_LOCAL_EDGES env) to force the
-# all-distributed path.
+# Pass local_edge_limit=0 to force the all-distributed path.
 CC_LOCAL_EDGE_LIMIT = 2_000_000
 
 
@@ -1344,15 +1338,15 @@ def neardup_components(
     equality is only ever declared by the exact comparison).
 
     HYBRID FINISH (r18 optimization): once the surviving edge count is
-    <= ``local_edge_limit`` (default CC_LOCAL_EDGE_LIMIT, env
-    UBA_CC_LOCAL_EDGES) the remaining rounds are replaced by ONE
-    collect of the broadcast-sized contracted edge set and a
-    driver-side min-label union-find — identical output (union-find
-    computes the same component minima the rounds converge to), at a
-    fraction of the job barriers. Graphs at or below the gate never
+    <= ``local_edge_limit`` (default CC_LOCAL_EDGE_LIMIT) the
+    remaining rounds are replaced by ONE collect of the
+    broadcast-sized contracted edge set and a driver-side min-label
+    union-find — identical output (union-find computes the same
+    component minima the rounds converge to), at a fraction of the job
+    barriers. Graphs at or below the gate never
     iterate distributed; graphs above it contract distributed until
     they clear the gate. ``max_iter`` still bounds the distributed
-    rounds; 0 via env/param forces the all-distributed path.
+    rounds; 0 forces the all-distributed path.
 
     Deterministic: min over an undirected edge set — no seed, no
     partition sensitivity. The DuckDB oracle replays it as a recursive
@@ -1390,11 +1384,7 @@ def neardup_components(
         return (row["n"], row["sa"], row["sb"])
 
     if local_edge_limit is None:
-        import os
-
-        local_edge_limit = int(
-            os.environ.get("UBA_CC_LOCAL_EDGES", str(CC_LOCAL_EDGE_LIMIT))
-        )
+        local_edge_limit = CC_LOCAL_EDGE_LIMIT
     converged = False
     local_stars: list[tuple[int, int]] | None = None
     e = None

@@ -32,6 +32,18 @@ def normalize_text(text: Column | str) -> Column:
     return F.trim(F.regexp_replace(F.lower(_col(text)), r"\s+", " "))
 
 
+def normalize_text_sql(text_expr: str) -> str:
+    """DuckDB expression computing exactly normalize_text(text_expr)."""
+    return f"trim(regexp_replace(lower({text_expr}), '\\s+', ' ', 'g'))"
+
+
+def tokens_sql(text_expr: str) -> str:
+    """DuckDB whitespace split of normalize_text_sql(text_expr) — the
+    oracle twin of ``tokens`` for non-empty documents (an empty
+    document splits to [''] here, to [] in ``tokens``)."""
+    return f"string_split({normalize_text_sql(text_expr)}, ' ')"
+
+
 def tokens_from_norm(norm: Column | str) -> Column:
     """Whitespace tokens of an ALREADY-normalized text column.
 
@@ -143,9 +155,7 @@ def language_id(text: Column | str) -> Column:
 
 def language_id_oracle_sql(text_expr: str) -> str:
     """DuckDB expression computing exactly language_id(text_expr)."""
-    toks = (
-        "string_split(trim(regexp_replace(lower(" + text_expr + "), '\\s+', ' ', 'g')), ' ')"
-    )
+    toks = tokens_sql(text_expr)
     score = {}
     for lang, words in LANG_STOPWORDS.items():
         wl = "[" + ", ".join(f"'{w}'" for w in words) + "]"
@@ -633,7 +643,6 @@ def boilerplate_stats(
     id_col: str = "doc_id",
     n: int = 8,
     min_df: int = 2,
-    pin_lineage: bool = True,
 ) -> DataFrame:
     """Per-document cross-corpus repetition: what fraction of a doc's
     distinct word ``n``-grams also appear in at least ``min_df`` - 1
@@ -665,10 +674,12 @@ def boilerplate_stats(
     owners and the min trick is incomplete, so the original
     aggregate + join-back runs (no registry caller uses it).
 
-    ``pin_lineage=True`` persists the per-doc shingle-array frame so
-    the normalize→tokenize→shingle chain (the heaviest map work) runs
-    once for its two consumers (the size() projection and the explode);
-    same contract and caveats as dedup._pin_and_hash_inv.
+    The per-doc shingle-array frame is pinned with a lazy
+    ``localCheckpoint`` so the normalize→tokenize→shingle chain (the
+    heaviest map work) runs once for its two consumers (the size()
+    projection and the explode). Unlike dedup._pin_and_hash_inv's
+    ``persist``, the pin is dropped once the frame's references go, and
+    a lost executor cannot recompute it.
 
     Output: (id, n_grams, n_shared, shared_bp) for docs with >= n
     tokens; shared_bp = floor(n_shared * 10000 / n_grams).
@@ -706,19 +717,18 @@ def boilerplate_stats(
             .cast("long")
             .alias("shared_bp"),
         )
-    if pin_lineage:
-        # localCheckpoint, NOT persist: persist() registers the frame
-        # in the CacheManager keyed by its analyzed plan, so a LATER
-        # identical construction silently reuses the cached rows even
-        # after every reference is gc'd — measured [9.9, 1.3, 0.9] s
-        # across three fresh constructions of this query (r19 probe).
-        # That poisons any best-of-N measurement of this row (and
-        # wastes storage memory for the rest of a 198-query sweep).
-        # localCheckpoint blocks are plain RDD blocks the
-        # ContextCleaner drops once the frame's refs go away, so every
-        # fresh construction recomputes — one materialization per
-        # query execution, honest timing, same two-consumer reuse.
-        sh = sh.localCheckpoint(eager=False)
+    # localCheckpoint, NOT persist: persist() registers the frame
+    # in the CacheManager keyed by its analyzed plan, so a LATER
+    # identical construction silently reuses the cached rows even
+    # after every reference is gc'd — measured [9.9, 1.3, 0.9] s
+    # across three fresh constructions of this query (r19 probe).
+    # That poisons any best-of-N measurement of this row (and
+    # wastes storage memory for the rest of a 198-query sweep).
+    # localCheckpoint blocks are plain RDD blocks the
+    # ContextCleaner drops once the frame's refs go away, so every
+    # fresh construction recomputes — one materialization per
+    # query execution, honest timing, same two-consumer reuse.
+    sh = sh.localCheckpoint(eager=False)
     # explode_outer + null guard: same optimizer-substitution dodge as
     # dedup.ngram_jaccard_pairs (inner explode infers a size()>0 filter
     # and inlines the whole shingle chain into a pre-shuffle Filter)

@@ -44,11 +44,9 @@ _R_MU = 6  # max_unit: window length - 1
 # (measured 0.7 s vs 2.0 s at sf0.1's 150k orders); above it the
 # per-class single-reducer sorts dominate and the two-stage wins
 # (measured 3.8 s vs 6.8 s at 32x's 4.8M). Values identical on both
-# paths (gate equality test + oracle parity). Set 0 via param or the
-# UBA_DISTRANK_LOCAL_ROWS env to force the two-stage path.
-_DISTRANK_TWO_STAGE_MIN_ROWS = int(
-    os.environ.get("UBA_DISTRANK_LOCAL_ROWS", "1000000")
-)
+# paths (gate equality test + oracle parity). Pass
+# two_stage_min_rows=0 to force the two-stage path.
+_DISTRANK_TWO_STAGE_MIN_ROWS = 1_000_000
 
 
 def _windowed_events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -726,10 +724,10 @@ def q_order_distribution_ranks(
     exactly despite being floats.
 
     HYBRID SORT (r18 optimization): above ``two_stage_min_rows``
-    (default _DISTRANK_TWO_STAGE_MIN_ROWS, env UBA_DISTRANK_LOCAL_ROWS)
-    the five-partition window is replaced by the scale-safe grouped
-    two-stage row_number — identical values on both paths (the gate
-    equality test pins it)."""
+    (default _DISTRANK_TWO_STAGE_MIN_ROWS) the five-partition window
+    is replaced by the scale-safe grouped two-stage row_number —
+    identical values on both paths (the gate equality test pins
+    it)."""
     from datafusion_uba_spark.operators.ranking import grouped_row_number
 
     orders = load_table(spark, sf_dir, "orders")
@@ -2983,7 +2981,9 @@ ORDER BY revenue_cents DESC, n_name
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
-# name -> (spark_fn, oracle_sql | None)
+# name -> (spark_fn, oracle_sql | None). Row order is source order:
+# this literal, then LLM_REGISTRY, UBA_REGISTRY and STATS_REGISTRY
+# appended below. The four family dicts share no name.
 REGISTRY: dict[str, tuple[QueryFn, str | None]] = {
     "retention_count": (q_retention_count, _ORACLE_RETENTION_STATS),
     "retention_sum": (q_retention_sum, _ORACLE_RETENTION_SUM),
@@ -3083,103 +3083,6 @@ REGISTRY.update(UBA_REGISTRY)
 from datafusion_uba_spark.queries_stats import STATS_REGISTRY  # noqa: E402
 
 REGISTRY.update(STATS_REGISTRY)
-
-# Driver-verification priority order. The driver's per-round correctness
-# capture has historically recorded only the FIRST 50 dict entries
-# (CORRECTNESS_r07 stopped at exactly 50 of 62), so the registry is
-# reordered each round to put the least-recently-driver-verified rows
-# first. Through round 8 this was a hand-rotated list, which the r8
-# verdict flagged as the standing process risk (forget to rotate and
-# 25 rows go two rounds stale). It is now DERIVED from the
-# CORRECTNESS_r*.json artifacts the driver itself writes: rows the
-# driver has never captured come first, then rows by ascending
-# last-captured round; ties keep the registry's family order. Any
-# 50-row prefix therefore always holds exactly the rows whose
-# verification is stalest — no manual step, no way to forget.
-
-
-# Rows whose implementation OR oracle changed, mapped to the round the
-# change shipped in: they jump the staleness queue until the driver's
-# CORRECTNESS artifact for that round (or later) mentions them, so the
-# next 50-row capture always attests the changed behavior (r13
-# advisor: the round that re-anchored token_length_histogram shipped a
-# capture that omitted it). Expiry is AUTOMATIC — once captured at or
-# after the named round the boost turns off, so a forgotten cleanup
-# can't starve the staleness queue.
-#
-# Since r15 the set is DERIVED from git (r14 verdict #2): diff hunks
-# since the newest CORRECTNESS artifact's commit are mapped to
-# top-level symbols and propagated through the symbol-level use/import
-# graph (datafusion_uba_spark/changed.py), so no behavioral change can
-# miss same-round attestation because the builder forgot to list it.
-# CHANGED_OVERRIDES remains for what git can't see — cross-round
-# capture gaps (a change the driver's window skipped in a prior round)
-# or semantic changes outside the package (testdata reinterpretation).
-# All r13/r14 hand entries were captured in r14 (boosts expired) and
-# are pruned.
-CHANGED_OVERRIDES: dict[str, int] = {}
-
-from datafusion_uba_spark.changed import derive_changed_rows  # noqa: E402
-
-try:
-    from pathlib import Path as _Path
-
-    _derived = derive_changed_rows(
-        _Path(__file__).resolve().parents[1], REGISTRY
-    )
-except Exception:  # pragma: no cover - derivation must never break import
-    _derived = {}
-
-CHANGED_THIS_ROUND: dict[str, int] = {**_derived, **CHANGED_OVERRIDES}
-
-
-def _verification_order(registry: dict) -> list[str]:
-    """Order registry rows by driver-verification staleness.
-
-    Reads every ``CORRECTNESS_r*.json`` next to the repo root (the
-    driver's own per-round artifacts). A row's "last captured" round is
-    the newest artifact that mentions it at all — rows the driver has
-    never seen sort first (new rows), then oldest-capture-first; rows
-    in CHANGED_THIS_ROUND outrank everything. Falls back to the
-    registry's natural order on a fresh checkout with no artifacts.
-    """
-    import json
-    import re
-    from pathlib import Path
-
-    repo = Path(__file__).resolve().parents[1]
-    last_seen: dict[str, int] = {}
-    for art in sorted(repo.glob("CORRECTNESS_r*.json")):
-        m = re.search(r"r(\d+)", art.stem)
-        if m is None:
-            continue
-        rnd = int(m.group(1))
-        try:
-            rows = json.loads(art.read_text())
-        except (OSError, ValueError):
-            continue  # a torn/corrupt artifact must not break import
-        if not isinstance(rows, dict):
-            continue
-        for name in rows:
-            last_seen[name] = max(last_seen.get(name, -1), rnd)
-    order = list(registry)
-    pos = {name: i for i, name in enumerate(order)}
-
-    def boosted(n: str) -> bool:
-        # changed-row boost, auto-expiring: active only until a
-        # capture at/after the round the change shipped in
-        return last_seen.get(n, -1) < CHANGED_THIS_ROUND.get(n, -(10**9))
-
-    return sorted(
-        order,
-        key=lambda n: (not boosted(n), last_seen.get(n, -1), pos[n]),
-    )
-
-
-_priority = _verification_order(REGISTRY)
-if set(_priority) != set(REGISTRY):  # pragma: no cover - structural guard
-    raise RuntimeError("verification-priority order lost registry rows")
-REGISTRY = {name: REGISTRY[name] for name in _priority}
 
 
 def queries() -> dict[str, QueryFn]:

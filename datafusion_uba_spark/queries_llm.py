@@ -71,8 +71,8 @@ def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
 # shared DuckDB SQL fragments
 # ---------------------------------------------------------------------------
 
-_NORM = "trim(regexp_replace(lower(text), '\\s+', ' ', 'g'))"
-_TOKS = f"string_split({_NORM}, ' ')"
+_NORM = text_ops.normalize_text_sql("text")
+_TOKS = text_ops.tokens_sql("text")
 
 
 # --- real merge-table BPE oracle (operators/bpe.py twin) -------------------
@@ -1621,9 +1621,10 @@ def q_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     partition and a hot key combines map-side — the same two-level
     decomposable-aggregate fix the verdict prescribed, obtained
     structurally rather than by salting. The shingle-array frame is
-    persisted so the normalize/tokenize/shingle chain (the heaviest map
-    work) runs once for its two consumers. Zero-shingle docs report 0
-    novel of 0 with novelty_bp = 0 (documented vacuous case)."""
+    pinned with a lazy localCheckpoint so the normalize/tokenize/shingle
+    chain (the heaviest map work) runs once for its two consumers.
+    Zero-shingle docs report 0 novel of 0 with novelty_bp = 0
+    (documented vacuous case)."""
     docs = _docs(spark, sf_dir)
     # localCheckpoint, NOT persist — persist()'s CacheManager entry
     # outlives every reference and silently serves later identical

@@ -10,7 +10,9 @@ registry grows.
 
 from __future__ import annotations
 
+import ast
 import json
+import subprocess
 import sys
 from pathlib import Path
 
@@ -134,42 +136,59 @@ def test_headline_value_is_sum_of_serialized_queries():
     assert headline["value"] == round(sum(sidecar["best"].values()), 4)
 
 
-# The driver's per-round correctness capture has only ever recorded the
-# first N registry dict entries (CORRECTNESS_r07: exactly 50 of 62) —
-# growth past the cap silently drops rows from verification instead of
-# failing. This pins the registry ORDER against that cap: every row the
-# driver has never hash-checked must sit inside the first-50 prefix.
-DRIVER_CORRECTNESS_CAPTURE = 50
+def _base_registry_names() -> list[str]:
+    """Keys of the REGISTRY dict literal in queries.py, in source order
+    (read from the source: the live dict also holds the family rows)."""
+    src = Path(__file__).resolve().parents[1] / "datafusion_uba_spark" / "queries.py"
+    for node in ast.parse(src.read_text()).body:
+        if (
+            isinstance(node, ast.AnnAssign)
+            and isinstance(node.target, ast.Name)
+            and node.target.id == "REGISTRY"
+        ):
+            return [k.value for k in node.value.keys]
+    raise AssertionError("no REGISTRY literal in queries.py")
 
 
-def test_never_verified_rows_inside_driver_correctness_capture():
+def test_registry_is_source_ordered_union_of_families():
+    """REGISTRY is the base literal followed by the LLM, UBA and stats
+    families, in source order, with no name defined twice (a repeated
+    name would silently replace the earlier row)."""
     from datafusion_uba_spark.queries import REGISTRY
+    from datafusion_uba_spark.queries_llm import LLM_REGISTRY
+    from datafusion_uba_spark.queries_stats import STATS_REGISTRY
+    from datafusion_uba_spark.queries_uba import UBA_REGISTRY
 
-    repo = Path(__file__).resolve().parents[1]
-    seen: set[str] = set()
-    for art in sorted(repo.glob("CORRECTNESS_r*.json")):
-        seen |= set(json.loads(art.read_text()))
-    names = list(REGISTRY)
-    prefix = set(names[:DRIVER_CORRECTNESS_CAPTURE])
-    never = [n for n in names if n not in seen]
-    if len(never) <= DRIVER_CORRECTNESS_CAPTURE:
-        outside = [n for n in never if n not in prefix]
-        assert not outside, (
-            f"rows never driver-verified fall outside the "
-            f"{DRIVER_CORRECTNESS_CAPTURE}-entry capture: {outside} — "
-            f"the staleness order in queries.py is broken"
-        )
-    else:
-        # a round that adds MORE new rows than one capture can hold
-        # cannot fit them all; the invariant that matters is that no
-        # already-verified row displaces a never-verified one from the
-        # prefix (the overflow rows sort first again next round)
-        displaced = [n for n in names[:DRIVER_CORRECTNESS_CAPTURE] if n in seen]
-        assert not displaced, (
-            f"{len(never)} never-verified rows exceed the "
-            f"{DRIVER_CORRECTNESS_CAPTURE}-entry capture, yet already-"
-            f"verified rows occupy prefix slots: {displaced}"
-        )
+    families = [_base_registry_names(), list(LLM_REGISTRY),
+                list(UBA_REGISTRY), list(STATS_REGISTRY)]
+    flat = [n for fam in families for n in fam]
+    dupes = sorted({n for n in flat if flat.count(n) > 1})
+    assert not dupes, f"names defined in more than one family: {dupes}"
+    assert list(REGISTRY) == flat
+
+
+def test_registry_import_starts_no_process():
+    """Importing the registry in a fresh interpreter spawns nothing
+    (no git, no helper process): the row set and order come from the
+    source alone."""
+    code = (
+        "import json, sys\n"
+        f"sys.path.insert(0, {str(Path(__file__).resolve().parents[1])!r})\n"
+        "spawned = []\n"
+        "def hook(event, args):\n"
+        "    if event in ('subprocess.Popen', 'os.system', 'os.fork',\n"
+        "                 'os.forkpty', 'os.posix_spawn', 'os.spawn',\n"
+        "                 'os.exec', 'os.startfile'):\n"
+        "        spawned.append(event)\n"
+        "sys.addaudithook(hook)\n"
+        "import datafusion_uba_spark.queries\n"
+        "print(json.dumps(spawned))\n"
+    )
+    out = subprocess.run(
+        [sys.executable, "-c", code], capture_output=True, text=True,
+        check=True, timeout=120,
+    )
+    assert json.loads(out.stdout.strip().splitlines()[-1]) == []
 
 
 def test_sidecar_carries_full_detail():
@@ -216,33 +235,3 @@ def test_headline_guard_headroom_at_220_rows():
     fhead, _ = build_artifacts(ok_q, ok_r, errors, 3, 0.1)
     fline = json.dumps(fhead, separators=(",", ":"))
     assert len(fline) < 1024, f"failed-heavy headline is {len(fline)} bytes"
-
-
-def test_changed_rows_jump_the_capture_queue():
-    """Rows named in CHANGED_THIS_ROUND whose change has NOT yet been
-    captured (no CORRECTNESS artifact at/after the named round) must
-    sort at the head of the registry, so the driver's 50-row capture
-    always attests behavior changed in the round (r13 advisor: the BPE
-    re-anchor round shipped a capture omitting the three rows the diff
-    changed). Once captured, the boost auto-expires."""
-    import json
-    import re
-    from pathlib import Path
-
-    from datafusion_uba_spark.queries import CHANGED_THIS_ROUND, REGISTRY
-
-    repo = Path(__file__).resolve().parents[1]
-    last_seen: dict[str, int] = {}
-    for art in sorted(repo.glob("CORRECTNESS_r*.json")):
-        rnd = int(re.search(r"r(\d+)", art.stem).group(1))
-        for name in json.loads(art.read_text()):
-            last_seen[name] = max(last_seen.get(name, -1), rnd)
-
-    names = list(REGISTRY)
-    assert set(CHANGED_THIS_ROUND) <= set(names)
-    pending = {
-        n
-        for n, rnd in CHANGED_THIS_ROUND.items()
-        if last_seen.get(n, -1) < rnd
-    }
-    assert set(names[: len(pending)]) == pending
