@@ -32,7 +32,6 @@ and banded signatures keep buckets small by construction.
 
 from __future__ import annotations
 
-from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -356,25 +355,17 @@ def _pin_and_hash_inv(
     ``freq_h`` is (hashed __s, __df) — df values byte-identical to the
     string pipeline's by the injectivity proof.
 
-    The per-doc shingle-ARRAY frame ``sh`` is persisted
-    (MEMORY_AND_DISK) BEFORE the proof aggregate runs, and the
-    inverted list is derived from the pinned frame, so the proof, the
+    The per-doc shingle-ARRAY frame ``sh`` is pinned (lazy
+    localCheckpoint) BEFORE the proof aggregate runs, and the inverted
+    list is derived from the pinned frame, so the proof, the
     inverted-list passes AND the verification arrays all read the
-    SAME rows even when the input lineage is nondeterministic
-    (re-read of changing storage, nondeterministic upstream) — the
-    r17 second-review finding, now covering the verify side too.
-    Pinning at the array level (r18 optimization, measured by stage
-    profile) is also the bigger reuse win: the string-keyed
-    normalize→tokenize→shingle chain — the heaviest map work of the
-    whole family — runs ONCE per row instead of three times (proof/
-    inverted-list prime + one per verification side), because
-    explode, hashing, frequency and both verify arrays are all cheap
-    derivations of the cached arrays. Residual caveat: executor-
-    memory eviction recomputes from lineage, which re-opens the
-    determinism assumption — truly nondeterministic inputs need a
-    checkpoint upstream. At 100 TB the pinned frame is large
-    (disk-backed spill, same bytes as the old exploded-list pin)."""
-    sh = sh.persist(StorageLevel.MEMORY_AND_DISK)
+    SAME rows even when the input lineage is nondeterministic — a
+    lost block fails the job rather than recomputing from lineage.
+    Pinning at the array level is also the reuse win: the
+    normalize→tokenize→shingle chain, the heaviest map work of the
+    family, runs ONCE per row instead of three times (proof/
+    inverted-list prime + one per verification side)."""
+    sh = sh.localCheckpoint(eager=False)
     # same construction as the unhashed path (explode_outer + null
     # guard — see ngram_jaccard_pairs on why outer), rooted on the
     # pinned arrays
@@ -388,7 +379,7 @@ def _pin_and_hash_inv(
     freq = (
         inv.groupBy("__s")
         .agg(F.count(F.lit(1)).alias("__df"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        .localCheckpoint(eager=False)
     )
     seed = injective_hash_seed(freq, "__s", hash_fn=hash_fn)
     hf = hash_fn or (lambda c, s: F.xxhash64(c, s))
@@ -454,7 +445,7 @@ def ngram_jaccard_pairs(
     ``hashed=False`` (the permanent A/B pin in
     tests/test_dedup_hashed.py). The proof costs one extra corpus
     aggregate and makes the call EAGER (a job runs at plan-build
-    time); the shingle arrays are persisted first so the proof covers
+    time); the shingle arrays are pinned first so the proof covers
     the exact rows the pipeline hashes (see ``_pin_and_hash_inv``).
 
     Output: (doc_a, doc_b, common_shingles, jaccard_bp) with doc_a <
@@ -834,9 +825,9 @@ def minhash_dedup_against(
     if num_perm % bands != 0:
         raise ValueError("bands must divide num_perm")
     # the increment's shingle arrays feed both its signature pass and
-    # its verification side — persist so the text chain runs once (r18)
-    inc_sh = _shingle_df(increment, text_col, id_col, n).persist(
-        StorageLevel.MEMORY_AND_DISK
+    # its verification side — pin so the text chain runs once (r18)
+    inc_sh = _shingle_df(increment, text_col, id_col, n).localCheckpoint(
+        eager=False
     )
     inc_sig = inc_sh.select(
         "__id",
@@ -846,14 +837,14 @@ def minhash_dedup_against(
     cor_sh_shared = None
     if corpus_index is None:
         # inline index build: when the index is NOT handed in, the
-        # corpus is being fully shingled here anyway — persist that
-        # frame and let the verification side read it too, instead of
+        # corpus is being fully shingled here anyway — pin that frame
+        # and let the verification side read it too, instead of
         # running the corpus text chain a second time (r18). When an
         # index IS handed in, verification keeps its candidate-only
         # (semi-join-sized) corpus read — the 100 TB posture.
-        cor_sh_shared = _shingle_df(corpus, text_col, id_col, n).persist(
-            StorageLevel.MEMORY_AND_DISK
-        )
+        cor_sh_shared = _shingle_df(
+            corpus, text_col, id_col, n
+        ).localCheckpoint(eager=False)
         cor_sig = cor_sh_shared.select(
             "__id",
             minhash_signature(
@@ -882,7 +873,7 @@ def minhash_dedup_against(
     # exact verify on candidates only: corpus shingles are computed for
     # the candidate dup_of set alone (join pushes the id filter down)
     # — unless the full corpus was just shingled for the inline index
-    # build, in which case the persisted frame is reused
+    # build, in which case the pinned frame is reused
     cor_sh = (
         cor_sh_shared
         if cor_sh_shared is not None
@@ -929,13 +920,10 @@ def minhash_lsh_pairs(
     if num_perm % bands != 0:
         raise ValueError("bands must divide num_perm")
     # THREE consumers read the shingle arrays (the signature pass and
-    # both verification sides) — the lazy persist runs the string
+    # both verification sides) — the lazy pin runs the string
     # normalize→tokenize→shingle chain once instead of three times
-    # (r18 stage profile; same reuse as the jaccard family's
-    # _pin_and_hash_inv pin, disk-backed at scale)
-    sh = _shingle_df(df, text_col, id_col, n).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
+    # (r18 stage profile; same reuse as _pin_and_hash_inv)
+    sh = _shingle_df(df, text_col, id_col, n).localCheckpoint(eager=False)
     sig = sh.select(
         "__id",
         minhash_signature(F.col("__sh"), num_perm, hash_family).alias("__sig"),
@@ -1329,8 +1317,7 @@ def neardup_components(
     MINIMUM id, which is exactly the canonical-id contract. All
     built-ins; each round localCheckpoints the edge frame — two longs
     per surviving edge — so round N's plan does not replay rounds
-    1..N-1 (at cluster scale use spark.sparkContext.setCheckpointDir +
-    .checkpoint() for fault tolerance instead). Convergence check is
+    1..N-1 (see README "Pins" on executor loss). Convergence check is
     two-stage to keep the steady-state cost at one tiny aggregate per
     round: a (count, sum(a), sum(b)) DECIMAL(38,0) fingerprint gates
     an exact exceptAll-both-ways set comparison, so the exact check

@@ -275,58 +275,55 @@ def train_pq(
         vec_col,
         id_col,
         cents,
-    ).cache()
-    try:
-        seed_rows = sample.orderBy("vec_id").limit(k).collect()
-        if len(seed_rows) < k:
-            raise ValueError(
-                f"pq: need at least k={k} training vectors, got "
-                f"{len(seed_rows)}"
-            )
-        books = [
-            [
-                [int(v) for v in r["__res"][i * dsub:(i + 1) * dsub]]
-                for r in seed_rows
+    ).localCheckpoint(eager=False)
+    seed_rows = sample.orderBy("vec_id").limit(k).collect()
+    if len(seed_rows) < k:
+        raise ValueError(
+            f"pq: need at least k={k} training vectors, got "
+            f"{len(seed_rows)}"
+        )
+    books = [
+        [
+            [int(v) for v in r["__res"][i * dsub:(i + 1) * dsub]]
+            for r in seed_rows
+        ]
+        for i in range(m)
+    ]
+    for _ in range(iters):
+        assigned = _slice_cols(sample, "__res", m, dsub).selectExpr(
+            "__res", f"{_codes_expr(books)} AS __codes"
+        )
+        exploded = assigned.selectExpr(
+            "posexplode(__codes) AS (__sub, __code)", "__res"
+        ).selectExpr(
+            "__sub",
+            "__code",
+            *[
+                f"element_at(__res, __sub * {dsub} + {t + 1}) AS __c{t}"
+                for t in range(dsub)
+            ],
+        )
+        means = exploded.groupBy("__sub", "__code").agg(
+            *[F.avg(f"__c{t}").alias(f"__m{t}") for t in range(dsub)]
+        )
+        got = {
+            (int(r["__sub"]), int(r["__code"])): [
+                int(round(r[f"__m{t}"])) for t in range(dsub)
             ]
+            for r in means.collect()
+        }
+        books = [
+            [got.get((i, j), books[i][j]) for j in range(k)]
             for i in range(m)
         ]
-        for _ in range(iters):
-            assigned = _slice_cols(sample, "__res", m, dsub).selectExpr(
-                "__res", f"{_codes_expr(books)} AS __codes"
-            )
-            exploded = assigned.selectExpr(
-                "posexplode(__codes) AS (__sub, __code)", "__res"
-            ).selectExpr(
-                "__sub",
-                "__code",
-                *[
-                    f"element_at(__res, __sub * {dsub} + {t + 1}) AS __c{t}"
-                    for t in range(dsub)
-                ],
-            )
-            means = exploded.groupBy("__sub", "__code").agg(
-                *[F.avg(f"__c{t}").alias(f"__m{t}") for t in range(dsub)]
-            )
-            got = {
-                (int(r["__sub"]), int(r["__code"])): [
-                    int(round(r[f"__m{t}"])) for t in range(dsub)
-                ]
-                for r in means.collect()
-            }
-            books = [
-                [got.get((i, j), books[i][j]) for j in range(k)]
-                for i in range(m)
-            ]
-        return {
-            "cents": cents,
-            "books": books,
-            "dim": dim,
-            "m": m,
-            "k": k,
-            "n_cells": n_cells,
-        }
-    finally:
-        sample.unpersist()
+    return {
+        "cents": cents,
+        "books": books,
+        "dim": dim,
+        "m": m,
+        "k": k,
+        "n_cells": n_cells,
+    }
 
 
 def pq_encode(

@@ -799,39 +799,37 @@ def train_ivf_centroids(
     n = n_rows if n_rows is not None else data.count()
     frac = min(1.0, train_sample / max(n, 1))
     sample = (
-        data.sample(False, frac, seed) if frac < 1.0 else data
-    ).select(
-        F.col(id_col).alias("vec_id"), F.col(vec_col).alias("embedding")
+        (data.sample(False, frac, seed) if frac < 1.0 else data)
+        .select(
+            F.col(id_col).alias("vec_id"), F.col(vec_col).alias("embedding")
+        )
+        .localCheckpoint(eager=False)
     )
-    sample = sample.cache()
-    try:
 
-        def _unit_quant(vec: list[float]) -> list[int]:
-            nrm = math.sqrt(sum(x * x for x in vec)) or 1.0
-            return [round(x / nrm * QUANT_SCALE) for x in vec]
+    def _unit_quant(vec: list[float]) -> list[int]:
+        nrm = math.sqrt(sum(x * x for x in vec)) or 1.0
+        return [round(x / nrm * QUANT_SCALE) for x in vec]
 
-        cents = [_unit_quant(p) for p in hyperplanes(dim, n_cells, seed)]
-        for _ in range(iters):
-            assigned = _ivf_assign(sample, "embedding", "vec_id", dim, cents)
-            # element-wise mean per cell: dim avg aggregates, one job;
-            # n_cells result rows (tiny) come back to the driver
-            means = assigned.groupBy("__cell").agg(
-                *[
-                    F.avg(F.col("vec_q")[i]).alias(f"__m{i}")
-                    for i in range(dim)
-                ]
-            )
-            by_cell = {
-                int(r["__cell"]): [r[f"__m{i}"] for i in range(dim)]
-                for r in means.collect()
-            }
-            cents = [
-                _unit_quant(by_cell[c + 1]) if c + 1 in by_cell else cents[c]
-                for c in range(n_cells)
+    cents = [_unit_quant(p) for p in hyperplanes(dim, n_cells, seed)]
+    for _ in range(iters):
+        assigned = _ivf_assign(sample, "embedding", "vec_id", dim, cents)
+        # element-wise mean per cell: dim avg aggregates, one job;
+        # n_cells result rows (tiny) come back to the driver
+        means = assigned.groupBy("__cell").agg(
+            *[
+                F.avg(F.col("vec_q")[i]).alias(f"__m{i}")
+                for i in range(dim)
             ]
-        return cents
-    finally:
-        sample.unpersist()
+        )
+        by_cell = {
+            int(r["__cell"]): [r[f"__m{i}"] for i in range(dim)]
+            for r in means.collect()
+        }
+        cents = [
+            _unit_quant(by_cell[c + 1]) if c + 1 in by_cell else cents[c]
+            for c in range(n_cells)
+        ]
+    return cents
 
 
 _IVF_META_SUFFIX = "__ivf_meta"
@@ -1289,7 +1287,6 @@ def hard_negative_topk(
     id_col: str = "vec_id",
     label_col: str = "label",
     dim: int | None = 64,
-    materialize: bool = True,
 ) -> DataFrame:
     """Hard-negative mining for contrastive / metric-learning training:
     for every anchor (query), the top-k most-similar vectors whose
@@ -1353,19 +1350,14 @@ def hard_negative_topk(
     )
     # the ranked survivors feed BOTH output branches; they are tiny
     # (<= |anchors| * 2k rows), so materialize them once — without the
-    # barrier each branch would re-execute the scoring join.
-    # materialize=False keeps the full lineage visible (the barrier
-    # truncates the plan at a LogicalRDD, blinding plan audits to
-    # everything upstream — tests/test_plan_audit.py audits THIS form)
+    # barrier each branch would re-execute the scoring join
     ranked = topk_per_key(
         cand,
         "__grp",
         [F.col("__cos").desc(), F.col("vec_id").asc()],
         k,
         salt_col="vec_id",
-    )
-    if materialize:
-        ranked = ranked.localCheckpoint(eager=True)
+    ).localCheckpoint(eager=True)
     top = ranked.where(~F.col("__is_pos"))
     pos = ranked.where(F.col("__is_pos") & (F.col("rank") == 1)).select(
         "query_id", F.col("__cos").alias("__pos_cos")

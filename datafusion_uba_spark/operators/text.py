@@ -677,9 +677,9 @@ def boilerplate_stats(
     The per-doc shingle-array frame is pinned with a lazy
     ``localCheckpoint`` so the normalize→tokenize→shingle chain (the
     heaviest map work) runs once for its two consumers (the size()
-    projection and the explode). Unlike dedup._pin_and_hash_inv's
-    ``persist``, the pin is dropped once the frame's references go, and
-    a lost executor cannot recompute it.
+    projection and the explode). Like every batch pin (README "Pins"),
+    it is dropped once the frame's references go, and a lost executor
+    cannot recompute it.
 
     Output: (id, n_grams, n_shared, shared_bp) for docs with >= n
     tokens; shared_bp = floor(n_shared * 10000 / n_grams).
@@ -1062,7 +1062,6 @@ def tfidf_topk(
     k: int = 3,
     text_col: str = "text",
     id_col: str = "doc_id",
-    materialize_tf: bool = False,
 ) -> DataFrame:
     """Per-document top-``k`` keywords by TF-IDF — the classic
     content-descriptor features (topic tagging, weak labeling, corpus
@@ -1092,10 +1091,7 @@ def tfidf_topk(
     aggregate and the join probe, and column pruning specializes the
     two copies so ReuseExchange cannot dedupe them — the explode +
     partial aggregate runs twice (this is the classic two-job TF-IDF
-    shape). ``materialize_tf=True`` cuts that with a localCheckpoint
-    of tf (same results, tf computed once — the right call when the
-    corpus scan dominates); the default stays pure-lineage, which is
-    what the registry row's oracle replays.
+    shape).
 
     Output: (id, token, tf, df, score_u, rank), rank in 1..k.
     """
@@ -1109,8 +1105,6 @@ def tfidf_topk(
     ).where(F.size("__toks") > 0)
     tok = s1.select("__id", F.explode("__toks").alias("__t"))
     tf = tok.groupBy("__id", "__t").agg(F.count(F.lit(1)).alias("tf"))
-    if materialize_tf:
-        tf = tf.localCheckpoint(eager=True)
     dfreq = tf.groupBy("__t").agg(F.count(F.lit(1)).alias("df"))
     j = tf.join(dfreq, "__t").withColumn(
         "score_u", F.expr("tf * 1000000L div df")

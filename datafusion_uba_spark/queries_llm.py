@@ -3858,9 +3858,7 @@ FROM v GROUP BY label
 _SWEEP_THRESHOLDS_BP = [7000, 7500, 8000, 8500, 9000]
 
 
-def q_dedup_threshold_sweep(
-    spark: SparkSession, sf_dir: str, materialize: bool = True
-) -> DataFrame:
+def q_dedup_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Dedup tuning curve in ONE pass: duplicate-pair count and
     flagged-document count at five Jaccard thresholds (0.70..0.90,
     the range production near-dup pipelines actually tune over), from
@@ -3885,12 +3883,10 @@ def q_dedup_threshold_sweep(
     docs = _docs(spark, sf_dir)
     # the verified pair set is consumed by BOTH the pair-count branch
     # and the per-doc max branch — materialize it once or Spark
-    # re-executes the whole candidate join per branch (measured 2x).
-    # materialize=False keeps the full lineage visible for plan audits
-    # (the barrier truncates the plan at a LogicalRDD)
-    pairs = dedup.ngram_jaccard_pairs(docs, threshold=0.7)
-    if materialize:
-        pairs = pairs.localCheckpoint(eager=True)
+    # re-executes the whole candidate join per branch (measured 2x)
+    pairs = dedup.ngram_jaccard_pairs(docs, threshold=0.7).localCheckpoint(
+        eager=True
+    )
     thr = spark.createDataFrame(
         [(t,) for t in _SWEEP_THRESHOLDS_BP], "threshold_bp long"
     )

@@ -189,7 +189,8 @@ def write_partitioned(
 def register(df: DataFrame, name: str, cache: bool = False) -> DataFrame:
     """Re-register a (result) DataFrame as a queryable table
     (examples/retention.rs:37-38). ``cache=True`` materializes it like
-    the reference's collected MemTable."""
+    the reference's collected MemTable; release it with
+    ``spark.catalog.uncacheTable(name)``."""
     if cache:
         df = df.cache()
     df.createOrReplaceTempView(name)

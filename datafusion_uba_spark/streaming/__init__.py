@@ -742,9 +742,13 @@ def streaming_exact_dedup_against_prescreened(
     side; without the cache every trigger would re-normalize and
     re-hash the whole corpus). Spark has no stream-scoped cache, so
     the caller owns the release: after stopping the query, call
-    ``spark.catalog.clearCache()`` or keep a handle to the corpus
-    frame and ``unpersist()`` it — a long-lived session constructing
-    many streams would otherwise accumulate dead cached relations.
+    ``spark.catalog.clearCache()``. ``corpus.unpersist()`` does NOT
+    release it — the cached relation is the derived fingerprint
+    projection, which the caller holds no handle to. A long-lived
+    session constructing many streams would otherwise accumulate
+    dead cached relations. This is a ``persist()``, not a
+    localCheckpoint, on purpose: the static side of a long-lived
+    stream must recompute after executor loss rather than fail.
     """
     from datafusion_uba_spark.operators.dedup import (
         fingerprint_bitset,

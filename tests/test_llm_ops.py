@@ -1076,24 +1076,6 @@ def test_approx_percentile_tracks_exact_quantiles(spark, sf_dir):
             assert abs(av - ev) / max(ev, 1.0) < tol, (lang, fld, av, ev)
 
 
-def test_tfidf_materialize_tf_equivalent(spark):
-    """materialize_tf=True returns identical rows while computing the
-    tf aggregate once (the checkpoint truncates lineage: no explode
-    remains in the executed plan)."""
-    from datafusion_uba_spark.operators.text import tfidf_topk
-
-    df = spark.createDataFrame(
-        [(i, f"alpha beta tok{i} tok{i} gamma") for i in range(30)],
-        "doc_id long, text string",
-    )
-    pure = {(r.doc_id, r.token, r.rank) for r in tfidf_topk(df, k=2).collect()}
-    mat_df = tfidf_topk(df, k=2, materialize_tf=True)
-    mat = {(r.doc_id, r.token, r.rank) for r in mat_df.collect()}
-    assert mat == pure and len(mat) > 0
-    plan = mat_df._jdf.queryExecution().executedPlan().toString()
-    assert "Generate explode" not in plan, plan
-
-
 def test_stickiness_hll_tracks_exact(spark, sf_dir):
     """The HLL stickiness twin's error bound vs the exact anchor:
     dau/wau within 2% relative per day (lgk=12; at fixture

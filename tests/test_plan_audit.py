@@ -14,13 +14,21 @@ Plans are inspected at sf0.001 — plan SHAPE is data-independent here
 (the same operators/joins appear at every SF; only AQE sizing
 decisions differ, and none of the asserted patterns is one AQE
 introduces).
+
+Pins do not blind the audit: a localCheckpoint truncates the pinned
+frame's plan at a LogicalRDD, so each row's production construction
+runs with ``localCheckpoint`` recorded, and the audit checks the
+returned frame's plan together with the plan of every frame pinned on
+the way.
 """
 
 from __future__ import annotations
 
 import re
+import threading
 
 import pytest
+from pyspark.sql.classic.dataframe import DataFrame
 
 from datafusion_uba_spark.queries import queries
 
@@ -77,6 +85,11 @@ _NLJ_ALLOWED = {
     # the ONE-ROW (t_tot, r_tot) totals frame broadcast against the
     # <= 2^16-row bucket table — scalar-subquery shape, O(2^16 x 1)
     "dsir_weights",
+    # SemDeDup's clustering runs kmeans_assign's Lloyd's rounds behind
+    # the pins in semantic_pairs / semantic_pairs_against: the same
+    # packed k-centroid broadcast scorer, O(|vectors| x 1)
+    "dedup_semantic",
+    "dedup_semantic_against",
     # the FIVE-ROW threshold grid range-joined (bp >= t) against the
     # materialized verified pair set — a band join over a broadcast
     # constant grid, O(|pairs| x 5)
@@ -86,57 +99,53 @@ _NLJ_ALLOWED = {
 _REGISTRY = queries()
 
 
-def _unbarriered_overrides():
-    """Rows whose production form contains an eager localCheckpoint:
-    the barrier truncates the plan at a LogicalRDD, so auditing the
-    returned frame would be VACUOUS for everything upstream. Audit the
-    materialize=False twin instead — same composition, full lineage."""
-    from datafusion_uba_spark.operators import similarity as _sim
-    from datafusion_uba_spark.queries_llm import (
-        _emb,
-        _query_vectors,
-        q_dedup_threshold_sweep,
-    )
-
-    def hard_negatives(spark, sf_dir):
-        emb = _emb(spark, sf_dir)
-        return _sim.hard_negative_topk(
-            emb, _query_vectors(emb), k=5, materialize=False
-        )
-
-    def dedup_threshold_sweep(spark, sf_dir):
-        return q_dedup_threshold_sweep(spark, sf_dir, materialize=False)
-
-    return {
-        "hard_negatives": hard_negatives,
-        "dedup_threshold_sweep": dedup_threshold_sweep,
-    }
-
-
-_PLAN_OVERRIDES = _unbarriered_overrides()
-
-
 @pytest.fixture(scope="module")
 def _all_plans(spark, sf_dir):
     """(executed, optimized) plan strings for every registry row, built
-    from ONE DataFrame construction per row. Construction is the
-    expensive part — a dozen rows execute real jobs at construction
-    time (gate probes, lazy-checkpoint AQE stages, fixpoints) — so rows
+    from ONE production DataFrame construction per row. Each string is
+    the returned frame's plan followed by the plan of every frame the
+    construction pinned (localCheckpoint, lazy or eager): the pin's
+    LogicalRDD hides everything upstream of it, so without the pre-pin
+    plans the audit would be vacuous behind every pin. The recorder
+    wraps ``DataFrame.localCheckpoint`` for the fixture's lifetime and
+    files each pinned plan under the row its thread is building.
+
+    Construction is the expensive part — a dozen rows execute real
+    jobs at construction time (gate probes, pins, fixpoints) — so rows
     build on a small thread pool (guide §2.6: independent driver-side
-    work overlaps; plan-string extraction is pure py4j). This fixture
-    replaced two sequential full-registry constructions (the executed
-    fixture + the optimized-plan loop in the window audit) that
-    together cost ~280 s of the suite's 33-minute wall."""
+    work overlaps; plan-string extraction is pure py4j)."""
     from concurrent.futures import ThreadPoolExecutor
+
+    building = threading.local()
+    pinned: dict[str, list[tuple[str, str]]] = {}
+    real = DataFrame.localCheckpoint
+
+    def plan_strings(jdf):
+        qe = jdf.queryExecution()
+        return qe.executedPlan().toString(), qe.optimizedPlan().toString()
+
+    def recording(self, *args, **kwargs):
+        row = getattr(building, "row", None)
+        if row is not None:
+            pinned[row].append(plan_strings(self._jdf))
+        return real(self, *args, **kwargs)
 
     def build(item):
         name, fn = item
-        qe = _PLAN_OVERRIDES.get(name, fn)(spark, sf_dir)._jdf.queryExecution()
-        return name, (qe.executedPlan().toString(),
-                      qe.optimizedPlan().toString())
+        pinned[name] = []
+        building.row = name
+        try:
+            found = [plan_strings(fn(spark, sf_dir)._jdf), *pinned[name]]
+        finally:
+            building.row = None
+        return name, tuple("\n".join(p) for p in zip(*found))
 
-    with ThreadPoolExecutor(max_workers=8) as pool:
-        return dict(pool.map(build, _REGISTRY.items()))
+    DataFrame.localCheckpoint = recording
+    try:
+        with ThreadPoolExecutor(max_workers=8) as pool:
+            return dict(pool.map(build, _REGISTRY.items()))
+    finally:
+        DataFrame.localCheckpoint = real
 
 
 @pytest.fixture(scope="module")
@@ -161,6 +170,11 @@ def test_nested_loop_joins_only_where_designed(plans):
         if "BroadcastNestedLoopJoin" in p and n not in _NLJ_ALLOWED
     ]
     assert not bad, f"unexpected nested-loop joins in: {bad}"
+    # the pin recorder is live: hard_negatives pins its ranked
+    # survivors eagerly, so its scoring crossJoin shows only in the
+    # recorded pre-pin plan — without the recorder the returned frame
+    # shows a LogicalRDD and this audit would see nothing behind pins
+    assert "BroadcastNestedLoopJoin" in plans["hard_negatives"]
 
 
 def test_no_expression_chains_in_scan_filters(plans):
@@ -513,6 +527,8 @@ def test_tpch_q5_pushdown_and_no_cartesian(spark, sf_dir):
 _GLOBAL_WINDOW_ALLOWED = {
     "stickiness_wau_hll",      # |weeks| sketch rows
     "kmeans_assign",           # k centroid rows
+    "dedup_semantic",          # k centroid rows (kmeans_assign's seeds)
+    "dedup_semantic_against",  # k centroid rows (kmeans_assign's seeds)
     "source_length_drift",     # |sources| rows
     "trigram_typicality",      # charset^3-bounded frequency table
     "source_temperature_sample",  # |sources| quota rows

